@@ -198,33 +198,31 @@ def merge_and_write(
     partition_by: list[str] | None = None,
     full_rewrite: bool = False,
     layout: dict | None = None,
-    prune_files: bool | None = None,
+    prune_files: bool = True,
 ) -> int:
     """MERGE ``changes`` into ``target`` and commit to ``target_table``;
     returns the written row count. ONE code path for the merge+write,
     shared by the batch loader and the streaming foreachBatch driver.
 
-    ``prune_files`` controls the ZONE-MAP-SCOPED merge (the file-level
+    ``prune_files`` enables the FILE-scoped merge (the file-level
     analogue of partition scoping, ref :369-408 — where the reference
-    delegates to Snowflake's micro-partition pruning): when the
-    unpartitioned target carries a zone map covering primary-key
-    columns, the change batch's PK min/max (one batch-sized agg) prunes
-    the target to only the FILES whose PK band overlaps the batch; the
-    merge joins against that subset and ``replace_files`` carries every
-    disjoint file into the new state as a hard link — I/O proportional
-    to the batch's key locality, not the table. None (default) =
-    automatic when available and it actually prunes; False = never;
-    True = require (raise if the table has no covering map). Correctness
-    is unconditional: a change row's PK lies inside the batch's range,
-    so every target file that could contain a matching row overlaps on
-    every scoped column, and disjoint files can only hold rows the
-    full-outer merge would pass through unchanged (NULL-PK rows never
-    equality-match a change). When the flat target has NO covering map
-    (or it declines), the SCAN-scoped path (``_scan_scoped_merge``)
-    still avoids the full-table rewrite: one pk-column semi-join scan
-    discovers the exact touched files — the layout-independent fallback
-    for targets unclustered on their key. ``prune_files=False``
-    disables both and forces the whole-table path.
+    delegates to Snowflake's micro-partition pruning): a chain of
+    pruners (``_touched_files``) lists the target files a matching row
+    could live in, the merge joins against only those files, and
+    ``replace_files`` carries every other file into the new state as a
+    hard link — I/O proportional to the batch's key locality, not the
+    table. The ZONE pruner splits the files on the batch's PK min/max
+    when the target carries a zone map covering a primary-key column;
+    on a flat target with no covering map (or whose map keeps every
+    file) the SCAN pruner's exact pk semi-join lists the touched files
+    instead — the layout-independent fallback for targets unclustered
+    on their key. When every pruner declines the merge rewrites the
+    whole table. ``prune_files=False`` skips the chain: the whole-table
+    reference path. Correctness is unconditional: a change row's PK lies
+    inside the batch's range (and in the semi-join's key set), so every
+    target file that could contain a matching row is listed, and
+    unlisted files can only hold rows the full-outer merge would pass
+    through unchanged (NULL-PK rows never equality-match a change).
 
     ``layout`` (``TableMeta.layout()``) re-applies the table's declared
     clustering / zone-map options whenever the write is a FULL rewrite,
@@ -241,14 +239,12 @@ def merge_and_write(
     partition, the target scan is partition-pruned to the batch's
     partitions, and the rewrite is proportional to the CDC batch, not
     the table. When the partitioned table ALSO carries a zone map
-    covering a primary-key column, the scope goes one level deeper
-    (HYBRID, ``_hybrid_scoped_merge``): partition pruning picks the
+    covering a primary-key column, the zone pruner runs over the touched
+    partitions' files (the HYBRID scope): partition pruning picks the
     directories, the zone map picks the files inside them, and
     ``replace_files(partition_by=...)`` hard-links every disjoint and
     untouched file through — a 10-row change to a 100 GB partition no
     longer rewrites the partition, only its overlapping files.
-    ``prune_files`` governs this path too (None = automatic when it
-    prunes, True = require, False = never).
 
     ``full_rewrite`` disables the partition-scoped path for one batch
     while KEEPING the hive partition layout on disk — the schema-
@@ -256,11 +252,6 @@ def merge_and_write(
     evolved layout so no reader can resolve the table schema from a
     stale old-layout footer.
     """
-    if prune_files is True and full_rewrite:
-        raise ValueError(
-            "prune_files=True cannot apply to a schema-evolution batch: "
-            "every file must rewrite to the evolved layout"
-        )
     # MERGE-ON-READ FOLD: a pending _deletes sidecar no longer stalls
     # ingestion (the r11 weak mark: defer-mode GDPR serialized every
     # sync behind a manual materialize). When the merge's primary keys
@@ -352,25 +343,19 @@ def merge_and_write(
         ]
         if not touched:
             return 0
-        if prune_files is not False:
-            # HYBRID scope: partition pruning picks the dirs, the zone
-            # map picks the files inside them — the partition-scoped
-            # rewrite below is the fallback when the table carries no
-            # covering map or nothing would prune.
-            n = _hybrid_scoped_merge(
-                warehouse,
-                target_table,
-                target,
-                changes,
-                pks,
-                version_cols,
-                partition_by,
-                touched,
-                require=prune_files is True,
-                fold_minus=fold_minus,
+        if prune_files:
+            # HYBRID scope: the zone pruner lists the touched files inside
+            # the touched partitions; the partition-scoped rewrite below
+            # is the fallback when the table carries no covering map or
+            # nothing would prune
+            overlap = _touched_files(
+                warehouse, target_table, changes, pks, partition_by, touched
             )
-            if n is not None:
-                return n
+            if overlap is not None:
+                return _merge_touched_files(
+                    warehouse, target_table, target, changes, pks,
+                    version_cols, overlap, partition_by, fold_minus,
+                )
         # One struct-IN predicate, not an OR-chain of equality conjunctions:
         # thousands of touched partitions would otherwise build a huge
         # expression tree that slows analysis/codegen. Catalyst converts
@@ -432,28 +417,13 @@ def merge_and_write(
         )
         merged.unpersist()
         return n
-    if not full_rewrite and prune_files is not False:
-        n = _zone_scoped_merge(
-            warehouse,
-            target_table,
-            target,
-            changes,
-            pks,
-            version_cols,
-            require=prune_files is True,
-            fold_minus=fold_minus,
-        )
-        if n is not None:  # committed by replace_files inside the helper
-            return n
-        # no zone map (or it declined): EXACT touched-file discovery
-        # via a pk-column semi-join scan — the layout-independent
-        # rewrite-amplification fix for unclustered flat targets
-        n = _scan_scoped_merge(
-            warehouse, target_table, target, changes, pks, version_cols,
-            fold_minus=fold_minus,
-        )
-        if n is not None:
-            return n
+    if not full_rewrite and prune_files:
+        overlap = _touched_files(warehouse, target_table, changes, pks)
+        if overlap is not None:
+            return _merge_touched_files(
+                warehouse, target_table, target, changes, pks,
+                version_cols, overlap, fold_minus=fold_minus,
+            )
     merged = apply_changes(
         target, changes, pks=pks, version_cols=version_cols
     ).persist()
@@ -619,114 +589,133 @@ def _batch_scope(changes, scope_cols: list[str]):
     return ranges, subs
 
 
-def _hybrid_scoped_merge(
+def _touched_files(
     warehouse: ParquetWarehouse,
     target_table: str,
-    target,
     changes,
     pks: list[str],
-    version_cols: list[str],
-    partition_by: list[str],
-    touched: list[tuple],
-    require: bool = False,
-    fold_minus=None,
-) -> int | None:
-    """HYBRID partition+file merge scope for hive-partitioned targets:
-    partition pruning picks the candidate directories (the batch's
-    ``touched`` partitions), the zone map picks the FILES inside them
-    whose primary-key band overlaps the batch, and ``replace_files``
-    commits the merge copy-on-write — every disjoint file inside a
-    touched partition AND every file of every untouched partition
-    hard-links through unchanged. This closes the remaining rewrite-
-    amplification path at 100 TB (SURVEY §7.3a refinement): the
-    partition-scoped path rewrites each touched partition ENTIRELY, so
-    a 10-row change to a 100 GB partition cost 100 GB of I/O; with
-    per-file zone stats the rewrite follows the batch's key locality
-    inside the partition, same as the flat zone-scoped path (ref
-    :369-408 — Snowflake's micro-partition pruning composes with its
-    partitioning the same way).
+    partition_by: list[str] | None = None,
+    touched: list[tuple] | None = None,
+) -> list[str] | None:
+    """The touched-file PRUNER CHAIN (prune, then merge once): each
+    pruner lists the target files a batch key could match, as paths
+    relative to the table dir, or declines with None. One decline rule
+    for all of them: a pruner that keeps every file declines, so the
+    next one runs. The zone pruner runs first — over the ``touched``
+    partitions' files when the table is partitioned, over all files
+    when it is flat; the scan pruner's exact pk semi-join runs for flat
+    tables only. Returns the first list that drops a file, or None when
+    every pruner declines (the caller's directory-grain or whole-table
+    path then runs)."""
+    # versioned snapshots commit whole states: a flat one takes the
+    # whole-table path, a partitioned one refuses loudly in replace_files
+    if not partition_by and os.path.isfile(
+        warehouse._version_pointer(target_table)
+    ):
+        return None
 
-    Correctness rests on the same invariants as the callers':
-    partition columns are stable per PK (``merge_and_write``'s
-    documented contract), so a matching target row can only live in a
-    touched partition, and within those only in a file whose PK band
-    overlaps the batch (NULL-PK rows never equality-match). Emptied
-    partitions simply have no directory in the assembled state — the
-    atomic whole-table swap retires them with no tombstone protocol.
+    def chain():
+        yield _zone_files(warehouse, target_table, changes, pks,
+                          partition_by, touched)
+        if not partition_by:
+            yield _scan_files(warehouse, target_table, changes, pks)
 
-    Returns the written row count when committed; None when the table
-    has no covering map, a touched partition's directory name cannot be
-    matched against the map (fall back to the partition-scoped path —
-    never guess), or pruning would not drop any file."""
-    import os
+    for found in chain():
+        if found is not None and len(found[0]) < found[1]:
+            return found[0]
+    return None
 
+
+def _zone_files(
+    warehouse: ParquetWarehouse,
+    target_table: str,
+    changes,
+    pks: list[str],
+    partition_by: list[str] | None,
+    touched: list[tuple] | None,
+) -> tuple[list[str], int] | None:
+    """ZONE-MAP pruner: ``(overlapping files, table file count)``. One
+    batch-sized aggregation (``_batch_scope``) computes the change set's
+    per-PK-column min/max; a file is kept iff its band overlaps. On a
+    partitioned table only the touched partitions' files are candidates
+    (the HYBRID scope): partition columns are stable per PK, so a
+    matching row can only live in a touched partition, and emptied
+    partitions simply have no directory in the committed state. Declines
+    for a missing map or one covering no primary key, an on-disk layout
+    that differs from ``partition_by``, partitions whose dirs cannot be
+    addressed (``_touched_partition_files``), and all-NULL batch keys."""
     zm = warehouse.zonemap(target_table)
     if zm is None:
-        if require:
-            raise ValueError(
-                f"prune_files=True but {target_table!r} has no zone map "
-                "(declare stat_cols covering a primary-key column)"
-            )
         return None
     scope_cols = [c for c in pks if c in zm["stat_cols"]]
     if not scope_cols:
-        if require:
-            raise ValueError(
-                f"prune_files=True but {target_table!r}'s zone map covers "
-                f"{zm['stat_cols']}, none of the primary keys {pks}"
-            )
         return None
     # Layout guard: every mapped file must sit under exactly the hive
-    # dirs partition_by declares. A flat-on-disk (or differently
-    # partitioned) table carried through the hybrid would duplicate the
-    # merged rows next to their old copies — fall back (or refuse, with
-    # require) instead.
+    # dirs partition_by declares (none for a flat merge). A table
+    # hive-partitioned ON DISK but merged without partition_by would
+    # crash replace_files; a flat-on-disk (or differently partitioned)
+    # table carried through the hybrid would duplicate the merged rows
+    # next to their old copies.
+    cols = partition_by or []
     for rel in zm["files"]:
         parts = rel.split("/")[:-1]
-        if len(parts) != len(partition_by) or any(
-            not p.startswith(f"{c}=") for p, c in zip(parts, partition_by)
+        if len(parts) != len(cols) or any(
+            not p.startswith(f"{c}=") for p, c in zip(parts, cols)
         ):
-            if require:
-                raise ValueError(
-                    f"prune_files=True but {target_table!r}'s on-disk "
-                    f"layout does not match partition_by={partition_by} "
-                    f"(e.g. file {rel!r})"
-                )
             return None
-    # Value-rendering guard: the prefixes below are built with Python
-    # str(v), but Spark hive-ESCAPES dir names for many value types
-    # (timestamps render ':' as '%3A', Python True vs Spark 'true',
-    # '"#%\\'*/:=?\\{[]^' and control chars in strings) — a mismatch
-    # would silently exclude the partition's files from the merge scope
-    # and write the change rows as DUPLICATES next to the old ones.
-    # Only integer values and provably-escape-free strings are rendered
-    # identically by both; anything else falls back to the
-    # partition-scoped path (or refuses, with require).
-    def _renderable(v) -> bool:
-        if v is None:
-            return True  # the exact __HIVE_DEFAULT_PARTITION__ sentinel
-        if isinstance(v, bool):
-            return False  # Python 'True' vs Spark 'true'
-        if isinstance(v, int):
-            return True
-        if isinstance(v, str):
-            return v != "" and not any(
-                ch in _HIVE_ESCAPED_CHARS or ord(ch) < 32 or ord(ch) == 127
-                for ch in v
-            )
-        return False  # timestamps/dates/floats/decimals: formats differ
+    cand = zm["files"]
+    if cols:
+        cand = _touched_partition_files(warehouse, target_table, cand,
+                                        cols, touched)
+        if cand is None:
+            return None
+    scope = _batch_scope(changes, scope_cols)
+    if scope is None:
+        return None  # all-NULL keys: nothing to scope by
+    ranges, subs = scope
+    lead = scope_cols[0]
+    overlap, _ = warehouse._split_by_subranges(
+        cand, lead, subs or [ranges[lead]],
+        {c: ranges[c] for c in scope_cols[1:]},
+    )
+    return overlap, len(zm["files"])
 
-    bad = [
-        v for vals in touched for v in vals if not _renderable(v)
-    ]
-    if bad:
-        if require:
-            raise ValueError(
-                f"prune_files=True but partition value(s) {bad[:3]!r} of "
-                f"{target_table!r} have engine-specific hive dir "
-                "renderings (escaped/typed) — the hybrid scope cannot "
-                "address their directories safely"
-            )
+
+def _hive_renderable(v) -> bool:
+    """True when Python ``str(v)`` names ``v``'s hive partition dir
+    exactly as Spark wrote it. Spark hive-ESCAPES dir names for many
+    value types (timestamps render ':' as '%3A', Python True vs Spark
+    'true', '"#%\\'*/:=?\\{[]^' and control chars in strings); only
+    integers, NULL (the exact __HIVE_DEFAULT_PARTITION__ sentinel) and
+    provably-escape-free strings render identically in both."""
+    if v is None:
+        return True
+    if isinstance(v, bool):
+        return False
+    if isinstance(v, int):
+        return True
+    if isinstance(v, str):
+        return v != "" and not any(
+            ch in _HIVE_ESCAPED_CHARS or ord(ch) < 32 or ord(ch) == 127
+            for ch in v
+        )
+    return False  # timestamps/dates/floats/decimals: formats differ
+
+
+def _touched_partition_files(
+    warehouse: ParquetWarehouse,
+    target_table: str,
+    files: dict,
+    partition_by: list[str],
+    touched: list[tuple],
+) -> dict | None:
+    """The zone-map entries of the files inside the ``touched``
+    partitions, or None when a touched partition's directory cannot be
+    addressed safely. A mis-rendered prefix would silently exclude the
+    partition's files from the merge scope and write the change rows as
+    DUPLICATES next to the old ones — so decline (the partition-scoped
+    rewrite runs instead) rather than guess."""
+    if not all(_hive_renderable(v) for vals in touched for v in vals):
         return None
     prefixes = {
         "/".join(
@@ -736,77 +725,29 @@ def _hybrid_scoped_merge(
         for vals in touched
     }
     cand = {
-        rel: st
-        for rel, st in zm["files"].items()
-        if os.path.dirname(rel) in prefixes
+        rel: st for rel, st in files.items() if os.path.dirname(rel) in prefixes
     }
-    # Formatting safety: a touched partition whose directory EXISTS on
-    # disk but matched no map entry means the hive dir-name rendering
-    # of its values disagrees with what Spark wrote (escaped special
-    # characters, non-canonical casts). Carrying those files while the
-    # merge re-emits their rows would duplicate them — fall back to the
-    # partition-scoped path instead of guessing.
+    # A touched partition whose directory EXISTS on disk but matched no
+    # map entry means the dir-name rendering of its values disagrees
+    # with what Spark wrote (escaped characters, non-canonical casts).
     matched = {os.path.dirname(rel) for rel in cand}
-    for p in prefixes - matched:
-        if os.path.isdir(os.path.join(warehouse.path(target_table), p)):
-            if require:
-                raise ValueError(
-                    f"prune_files=True but partition dir {p!r} of "
-                    f"{target_table!r} matched no zone-map entry"
-                )
-            return None
-    scope = _batch_scope(changes, scope_cols)
-    if scope is None:
-        return None
-    ranges, subs = scope
-    lead = scope_cols[0]
-    extra = {c: ranges[c] for c in scope_cols[1:]}
-    overlap, disjoint = warehouse._split_by_subranges(
-        cand, lead, subs if subs is not None else [ranges[lead]], extra
-    )
-    untouched = len(zm["files"]) - len(cand)
-    if not disjoint and untouched == 0:
-        return None  # nothing prunes beyond the partition-scoped path
     base = warehouse.path(target_table)
-    spark = changes.sparkSession
-    if overlap:
-        sub_target = spark.read.option("basePath", base).parquet(
-            *[os.path.join(base, rel) for rel in overlap]
-        )
-        sub_target = sub_target.select(*target.columns)
-        # pending-delete fold: the raw file read bypasses the read mask,
-        # so the masked rows must be dropped here or the rewrite would
-        # resurrect them (merge_and_write's fold contract)
-        sub_target = warehouse._apply_pending_deletes(
-            spark, sub_target, target_table
-        )
-    else:  # pure inserts relative to the touched partitions' bands
-        sub_target = target.limit(0)
-    merged = apply_changes(
-        sub_target, changes, pks=pks, version_cols=version_cols
-    )
-    res = warehouse.replace_files(
-        merged, target_table, overlap, partition_by=partition_by,
-        carry_deletes_minus=fold_minus,
-    )
-    return res["rows_written"]
+    if any(os.path.isdir(os.path.join(base, p)) for p in prefixes - matched):
+        return None
+    return cand
 
 
-def _scan_scoped_merge(
+def _scan_files(
     warehouse: ParquetWarehouse,
     target_table: str,
-    target,
     changes,
     pks: list[str],
-    version_cols: list[str],
-    fold_minus=None,
-) -> int | None:
-    """SCAN-scoped merge for flat targets with NO zone map (or whose
-    map declined): discover the EXACT touched-file set with one
-    semi-join of the target's primary-key column(s) — projected down to
-    (pks, ``_metadata.file_path``), so the scan reads the pk column,
-    not the table — against the batch's distinct keys, then merge only
-    those files and commit copy-on-write through ``replace_files``.
+) -> tuple[list[str], int] | None:
+    """SCAN pruner for flat targets: ``(touched files, table file
+    count)``, discovered EXACTLY with one semi-join of the target's
+    primary-key column(s) — projected down to (pks,
+    ``_metadata.file_path``), so the scan reads the pk column, not the
+    table — against the batch's distinct keys.
 
     This is the layout-independent rewrite-amplification fix (the same
     touched-file discovery join Delta's MERGE runs): the zone map only
@@ -823,26 +764,14 @@ def _scan_scoped_merge(
     Exactness: the semi-join reads the committed files themselves, so
     the touched set has no false positives OR negatives — a file not in
     it provably holds no matching pk (NULL pks never equality-match),
-    and inserts land in new files. Returns None (caller falls back)
-    for versioned/bucketed/hive-on-disk layouts, single-file tables,
-    empty batches, and batches that touch every file."""
-    import os
-
+    and inserts land in new files. Declines for bucketed and
+    hive-on-disk layouts and for single-file tables."""
     base = warehouse.path(target_table)
-    if os.path.isfile(warehouse._version_pointer(target_table)):
-        return None
     if os.path.isfile(os.path.join(base, BUCKET_SPEC_FILE)):
         return None
-    all_rels = set()
-    for dirpath, dirs, files in os.walk(base):
-        # hidden dirs (_deletes sidecar) are not table data files
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in files:
-            if f.endswith(".parquet"):
-                rel = os.path.relpath(os.path.join(dirpath, f), base)
-                if "/" in rel:
-                    return None  # hive-on-disk without partition_by
-                all_rels.add(rel)
+    all_rels = warehouse._walk_parquet_rels(base)
+    if any("/" in rel for rel in all_rels):
+        return None  # hive-on-disk without partition_by
     if len(all_rels) <= 1:
         return None  # nothing to prune against
     spark = changes.sparkSession
@@ -854,11 +783,9 @@ def _scan_scoped_merge(
         # carry millions of distinct pks, and a forced broadcast would
         # blow the driver where the shuffled semi-join (AQE's choice)
         # completes
-        n_keys = keys.count()
-        if n_keys == 0:
-            return None  # empty batch (merge_and_write short-circuits too)
         probe = (
-            keys if n_keys > _SCAN_BROADCAST_KEY_CAP else F.broadcast(keys)
+            keys if keys.count() > _SCAN_BROADCAST_KEY_CAP
+            else F.broadcast(keys)
         )
         touched_fps = [
             r["__fp"]
@@ -871,115 +798,49 @@ def _scan_scoped_merge(
         ]
     finally:
         keys.unpersist()
-    overlap = sorted(
-        {ParquetWarehouse.file_rel(fp, base) for fp in touched_fps}
-    )
-    if len(overlap) == len(all_rels):
-        return None  # every file holds a matching key: nothing prunes
-    if overlap:
-        sub_target = spark.read.option("basePath", base).parquet(
-            *[os.path.join(base, rel) for rel in overlap]
-        )
-        sub_target = sub_target.select(*target.columns)
-        # pending-delete fold: raw file reads bypass the read mask
-        sub_target = warehouse._apply_pending_deletes(
-            spark, sub_target, target_table
-        )
-    else:  # pure-insert batch (or keys absent): merge against nothing
-        sub_target = target.limit(0)
-    merged = apply_changes(
-        sub_target, changes, pks=pks, version_cols=version_cols
-    )
-    res = warehouse.replace_files(
-        merged, target_table, overlap, carry_deletes_minus=fold_minus
-    )
-    return res["rows_written"]
+    overlap = {ParquetWarehouse.file_rel(fp, base) for fp in touched_fps}
+    return sorted(overlap), len(all_rels)
 
 
-def _zone_scoped_merge(
+def _merge_touched_files(
     warehouse: ParquetWarehouse,
     target_table: str,
     target,
     changes,
     pks: list[str],
     version_cols: list[str],
-    require: bool = False,
+    touched_files: list[str],
+    partition_by: list[str] | None = None,
     fold_minus=None,
-) -> int | None:
-    """Attempt the zone-map-scoped merge (see ``merge_and_write``);
-    returns the written row count when it committed, None when the
-    table has no covering map or pruning would not drop any file (the
-    caller falls back to the whole-table merge). One batch-sized
-    aggregation computes the change set's per-PK-column min/max; the
-    target's zone map then splits its files into the overlapping set
-    (joined) and the disjoint set (hard-linked through untouched by
-    ``replace_files``)."""
-    import os
-
-    zm = warehouse.zonemap(target_table)
-    if zm is None or os.path.isfile(warehouse._version_pointer(target_table)):
-        if require:
-            raise ValueError(
-                f"prune_files=True but {target_table!r} has no zone map "
-                "(declare stat_cols covering a primary-key column)"
-            )
-        return None
-    if any("/" in rel for rel in zm["files"]):
-        # hive-partitioned ON DISK but merged without partition_by
-        # (undeclared layout): replace_files needs a flat dir — fall
-        # back to the whole-table path instead of crashing mid-merge
-        if require:
-            raise ValueError(
-                f"prune_files=True but {target_table!r} is "
-                "hive-partitioned — use partition_by scoping instead"
-            )
-        return None
-    scope_cols = [c for c in pks if c in zm["stat_cols"]]
-    if not scope_cols:
-        if require:
-            raise ValueError(
-                f"prune_files=True but {target_table!r}'s zone map covers "
-                f"{zm['stat_cols']}, none of the primary keys {pks}"
-            )
-        return None
-    scope = _batch_scope(changes, scope_cols)
-    if scope is None:
-        return None  # empty batch or all-NULL keys: nothing to scope by
-    ranges, subs = scope
-    split = None
-    lead = scope_cols[0]
-    if subs is not None:
-        extra = {c: ranges[c] for c in scope_cols[1:]}
-        split = warehouse.zone_overlap_split_multi(
-            target_table, lead, subs, extra
-        )
-    if split is None:
-        split = warehouse.zone_overlap_split(target_table, ranges)
-    if split is None:
-        return None
-    overlap, disjoint = split
-    if not disjoint:
-        return None  # no file prunes: the plain whole-table path is equal
+) -> int:
+    """The copy-on-write tail every file pruner shares: merge the batch
+    against only ``touched_files`` and commit through ``replace_files``,
+    which hard-links every other file into the new state. Returns the
+    written row count. replace_files stages to a temp dir and swaps
+    atomically, so the lazy merged plan may safely read the files it
+    replaces."""
     base = warehouse.path(target_table)
     spark = changes.sparkSession
-    if overlap:
-        sub_target = spark.read.option("basePath", base).parquet(
-            *[os.path.join(base, rel) for rel in overlap]
+    if touched_files:
+        sub_target = (
+            spark.read.option("basePath", base)
+            .parquet(*[os.path.join(base, rel) for rel in touched_files])
+            # mirror the caller's (possibly source-reordered) column order
+            .select(*target.columns)
         )
-        # mirror the caller's (possibly source-reordered) column order
-        sub_target = sub_target.select(*target.columns)
-        # pending-delete fold: raw file reads bypass the read mask
+        # pending-delete fold: the raw file read bypasses the read mask,
+        # so the masked rows must be dropped here or the rewrite would
+        # resurrect them (merge_and_write's fold contract)
         sub_target = warehouse._apply_pending_deletes(
             spark, sub_target, target_table
         )
-    else:  # pure out-of-range insert batch: merge against nothing
+    else:  # no listed file holds a batch key: pure inserts
         sub_target = target.limit(0)
     merged = apply_changes(
         sub_target, changes, pks=pks, version_cols=version_cols
     )
-    # replace_files stages to a temp dir and swaps atomically, so the
-    # lazy merged plan may safely read the files it replaces.
     res = warehouse.replace_files(
-        merged, target_table, overlap, carry_deletes_minus=fold_minus
+        merged, target_table, touched_files, partition_by=partition_by,
+        carry_deletes_minus=fold_minus,
     )
     return res["rows_written"]

@@ -3476,7 +3476,7 @@ def q131_zone_merge_prune(spark, sf_dir):
     the reference delegates to Snowflake): customer lands range-
     clustered on its PK with a zone map, a q18-style change batch
     restricted to a NARROW key band (2/5..9/20 of the keyspace) merges
-    through the automatic prune_files path, and the face returns the
+    through the automatic zone pruner, and the face returns the
     final on-disk table state — hash-matched against a pure-SQL
     restatement of the same merge over the raw inputs, proving file
     pruning changes nothing but the I/O. Driver-side guards fail the
@@ -3947,7 +3947,8 @@ _Q137_ORACLE = """
 @query("q137_hybrid_merge_prune", _Q137_ORACLE)
 def q137_hybrid_merge_prune(spark, sf_dir):
     """The HYBRID partition+file CDC merge end-to-end
-    (cdc._hybrid_scoped_merge; ref :369-408 — partition scoping composed
+    (the zone pruner over the touched partitions' files,
+    cdc._zone_files; ref :369-408 — partition scoping composed
     with micro-partition pruning, both delegated to Snowflake by the
     reference): customer lands hive-partitioned on a pk-derived quarter
     bucket AND range-clustered on the pk within partitions, with a zone
@@ -4197,7 +4198,8 @@ _Q140_ORACLE = """
 
 @query("q140_scan_scoped_merge", _Q140_ORACLE)
 def q140_scan_scoped_merge(spark, sf_dir):
-    """The SCAN-scoped CDC merge end-to-end (cdc._scan_scoped_merge):
+    """The SCAN-scoped CDC merge end-to-end (the scan pruner,
+    cdc._scan_files):
     customer lands hash-scattered on nationkey — UNCLUSTERED on its pk,
     with NO zone map, the retrofitted-table shape where the zone path
     cannot prune and the old fallback was a full-table rewrite per

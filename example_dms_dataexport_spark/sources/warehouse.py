@@ -510,54 +510,10 @@ class ParquetWarehouse:
         cls, zm: dict, ranges: dict
     ) -> tuple[list[str], list[str]]:
         """Partition a zone map's files into (overlapping, disjoint) for
-        conjunctive per-column ranges — a file overlaps only if EVERY
-        queried column's [min, max] band intersects that column's range.
-        Files with an all-NULL band for a queried column land on the
-        disjoint side (a range predicate — and a PK equality — never
-        matches NULL). Bounds of None are unbounded on that end."""
-        norm = {
-            c: (cls._zonemap_stat(b[0]), cls._zonemap_stat(b[1]))
-            for c, b in ranges.items()
-        }
-        overlapping: list[str] = []
-        disjoint: list[str] = []
-        for rel, stats in zm["files"].items():
-            ok = True
-            for c, (nlo, nhi) in norm.items():
-                mn, mx = stats[c]
-                if mn is None:  # all-NULL file for this column
-                    ok = False
-                    break
-                if (nhi is not None and mn > nhi) or (
-                    nlo is not None and mx < nlo
-                ):
-                    ok = False
-                    break
-            (overlapping if ok else disjoint).append(rel)
-        return overlapping, disjoint
-
-    def zone_overlap_split_multi(
-        self,
-        table: str,
-        col: str,
-        subranges: list[tuple],
-        extra_ranges: dict | None = None,
-    ) -> tuple[list[str], list[str]] | None:
-        """Like ``zone_overlap_split``, but the leading column is tested
-        against a UNION of sub-ranges: a file overlaps iff its ``col``
-        band intersects ANY sub-range AND every ``extra_ranges`` column
-        overlaps its (single) range. This is what makes a SCATTERED
-        change batch prune — a batch touching the two ends of the
-        keyspace has a global [min, max] that covers every file, but
-        its per-bucket sub-ranges leave the whole middle disjoint.
-        Returns None when the map doesn't cover the columns."""
-        if os.path.isfile(self._version_pointer(table)):
-            return None
-        zm = self.zonemap(table)
-        need = [col, *(extra_ranges or {})]
-        if zm is None or any(c not in zm["stat_cols"] for c in need):
-            return None
-        return self._split_by_subranges(zm["files"], col, subranges, extra_ranges)
+        conjunctive per-column ranges — the one-sub-range case of
+        ``_split_by_subranges``."""
+        (col, band), *extra = ranges.items()
+        return cls._split_by_subranges(zm["files"], col, [band], dict(extra))
 
     @classmethod
     def _split_by_subranges(
@@ -567,10 +523,18 @@ class ParquetWarehouse:
         subranges: list[tuple],
         extra_ranges: dict | None = None,
     ) -> tuple[list[str], list[str]]:
-        """Core union-of-sub-ranges overlap test over a zone-map file
-        dict (possibly a SUBSET of a table's map — the hybrid
-        partition+file merge restricts it to the touched partitions'
-        files first). Shared by ``zone_overlap_split_multi``."""
+        """Partition a zone-map file dict (possibly a SUBSET of a
+        table's map — the CDC merge's zone pruner restricts it to the
+        touched partitions' files first) into (overlapping, disjoint):
+        a file overlaps iff its ``col`` band intersects ANY sub-range
+        AND every ``extra_ranges`` column's band intersects its (single)
+        range. The union is what makes a SCATTERED change batch prune —
+        a batch touching the two ends of the keyspace has a global
+        [min, max] that covers every file, but its per-bucket sub-ranges
+        leave the whole middle disjoint. Files with an all-NULL band for
+        a tested column land on the disjoint side (a range predicate —
+        and a PK equality — never matches NULL). Bounds of None are
+        unbounded on that end."""
         subs = [
             (cls._zonemap_stat(lo), cls._zonemap_stat(hi))
             for lo, hi in subranges
@@ -608,8 +572,8 @@ class ParquetWarehouse:
         """Split the table's files into (overlapping, disjoint) relative
         paths for the given conjunctive ranges, or None when the table
         has no zone map covering every range column (callers fall back
-        to an unpruned plan). The file-pruning primitive the zone-scoped
-        CDC merge composes with ``replace_files``."""
+        to an unpruned plan). The same split the CDC merge's zone
+        pruner (``cdc._zone_files``) composes with ``replace_files``."""
         if os.path.isfile(self._version_pointer(table)):
             return None  # snapshots rewrite whole states; no file CoW
         zm = self.zonemap(table)

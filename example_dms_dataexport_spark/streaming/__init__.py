@@ -16,4 +16,6 @@ sketch_stream continuous sketch-state maintenance (HLL distinct counts,
              same exactly-once guarded fold
 joins        watermarked stream-stream interval join (click attribution)
              with time-bounded state eviction
+replay       the (checkpoint lineage, batch_id) replay guard the
+             exactly-once foreachBatch sinks share
 """

@@ -176,7 +176,7 @@ def run_zone_cdc_fixture(
     stored UNpartitioned but range-clustered on its PK with a zone map,
     the q18 change-set is restricted to a narrow PK band
     (2/5..9/20 of the keyspace), and ``merge_and_write``'s automatic
-    prune_files path must join against only the overlapping files and
+    zone pruner must join against only the overlapping files and
     hard-link the rest through. Benchmarked per-round so a regression
     back to whole-table merge I/O shows up as a wall-time jump.
     Returns (rows_written, files_carried, files_total)."""
@@ -247,7 +247,8 @@ def run_hybrid_cdc_fixture(
     n_files: int = 16,
 ) -> tuple[int, int, int]:
     """HYBRID partition+file BATCH merge at bench scale (the composition
-    of the two fixtures above; cdc._hybrid_scoped_merge): customer is
+    of the two fixtures above; cdc._zone_files over the touched
+    partitions): customer is
     hive-partitioned on a stable pk-derived quarter bucket AND
     range-clustered on the pk within partitions with a zone map; the
     q18 change-set is restricted to a narrow key band inside ONE
@@ -330,7 +331,7 @@ def run_scan_cdc_fixture(
     workdir: str,
     n_files: int = 32,
 ) -> tuple[int, int, int]:
-    """SCAN-scoped BATCH merge at bench scale (cdc._scan_scoped_merge —
+    """SCAN-scoped BATCH merge at bench scale (cdc._scan_files —
     the layout-independent fallback): customer is stored UNCLUSTERED on
     its pk (hash-scattered on nationkey, NO zone map — the
     retrofitted-table shape), and the q18-style change-set is

@@ -40,6 +40,7 @@ from ..cdc import merge_and_write
 from ..sources.csv_stage import cdc_schema
 from ..sources.stage import stage_extension
 from ..sources.warehouse import ParquetWarehouse
+from .replay import replayed
 
 
 def read_cdc_stream(
@@ -444,13 +445,8 @@ def start_cdc_group_stream(
     def merge_epoch(batch: DataFrame, batch_id: int) -> None:
         if not batch.columns:
             return
-        gm = warehouse.group_meta(group)
-        if (
-            gm.get("checkpoint") is not None
-            and gm.get("last_batch_id") is not None
-            and os.path.realpath(gm["checkpoint"]) == lineage
-            and batch_id <= gm["last_batch_id"]
-        ):
+        if replayed(warehouse.group_meta(group), lineage, batch_id,
+                    "checkpoint", "last_batch_id"):
             # re-delivered epoch (crash between the group flip and the
             # streaming checkpoint advance): every member merge already
             # committed AND the group pointer already advanced — skip

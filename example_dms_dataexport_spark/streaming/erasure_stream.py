@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..sources.warehouse import ParquetWarehouse
+from .replay import replayed
 
 
 def start_erasure_stream(
@@ -73,20 +74,11 @@ def start_erasure_stream(
     def erase_batch(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        meta = warehouse.read_meta(table)
-        stored = meta.get("erasure_checkpoint")
-        last = meta.get("last_erasure_batch")
-        if (
-            stored is not None
-            and last is not None
-            and os.path.realpath(stored) == lineage
-            and batch_id <= last
-        ):
+        if replayed(warehouse.read_meta(table), lineage, batch_id,
+                    "erasure_checkpoint", "last_erasure_batch"):
             # re-delivered window (crash between the erase commit and
             # the streaming checkpoint advance): the subjects are
-            # already gone — skip with zero data-file I/O. Lineage is
-            # the realpath'd checkpoint dir so a fresh checkpoint
-            # (batch ids restart at 0) never matches a stale marker.
+            # already gone — skip with zero data-file I/O
             return
         if mode == "defer":
             warehouse.delete_keys(spark, table, key_col, batch.select(subj))

@@ -28,6 +28,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.incremental import update_rollup
 from ..sources.warehouse import ParquetWarehouse
+from .replay import replayed
 
 
 def guarded_fold(
@@ -57,15 +58,8 @@ def guarded_fold(
     def fold_batch(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        meta = warehouse.read_meta(table)
-        last = meta.get("last_batch_id")
-        stored = meta.get("checkpoint")
-        if (
-            last is not None
-            and stored is not None
-            and os.path.realpath(stored) == lineage
-            and batch_id <= last
-        ):
+        if replayed(warehouse.read_meta(table), lineage, batch_id,
+                    "checkpoint", "last_batch_id"):
             # crash-replay of a batch whose overwrite already committed —
             # folding it again would double-apply its deltas
             return

@@ -14,7 +14,7 @@ the partitions, rewrite I/O follows the batch's key locality. Pins:
 - new-partition inserts create dirs while carrying everything else;
 - the maintained zone map stays exact through the hybrid commit;
 - layout guard: a flat-on-disk table merged with partition_by falls
-  back (or refuses under prune_files=True) instead of duplicating rows.
+  back instead of duplicating rows.
 """
 
 from __future__ import annotations
@@ -190,11 +190,9 @@ def test_hybrid_refuses_engine_specific_partition_renderings(spark, tmp_path):
     """Partition values whose hive dir names Spark escapes or renders
     differently than Python str() (booleans here: 'true' vs 'True')
     must NOT take the hybrid path — building the wrong prefix would
-    silently exclude the partition's files and duplicate its rows. The
-    default falls back to the partition-scoped rewrite (correct
-    content); prune_files=True refuses loudly."""
-    import pytest
-
+    silently exclude the partition's files and duplicate its rows: the
+    merge falls back to the partition-scoped rewrite (correct
+    content)."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     df = spark.createDataFrame(
         [(i, i % 2 == 0, i * 10) for i in range(20)],
@@ -208,9 +206,6 @@ def test_hybrid_refuses_engine_specific_partition_renderings(spark, tmp_path):
         "op string, pk long, flag boolean, val long, "
         "_dms_filename string, _dms_rownum long",
     )
-    with pytest.raises(ValueError, match="hive dir renderings"):
-        merge_and_write(wh, "t", target, ch, pks=["pk"], version_cols=VC,
-                        partition_by=["flag"], prune_files=True)
     merge_and_write(wh, "t", target, ch, pks=["pk"], version_cols=VC,
                     partition_by=["flag"])
     # NB the read-back partition column is the hive dir STRING 'true' —

@@ -217,20 +217,20 @@ def test_zone_scoped_merge_pure_out_of_range_inserts(spark, tmp_path):
 def test_zone_scoped_merge_fallbacks(spark, tmp_path):
     """No map -> the SCAN-scoped path takes over (exact touched-file
     semi-join) and prune_files=False still forces the whole-table path;
-    prune_files=True without a covering map raises; all-NULL batch keys
-    fall back safely."""
+    a map covering no primary key declines to the scan scope too; all-
+    NULL batch keys fall back safely."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
-    wh.overwrite(_target_df(spark, 50), "nomap")
+    wh.overwrite(_target_df(spark, 50).repartition(4), "nomap")
     changes = _changes_df(spark, [("U", 14, 9, "x", "f", 1)])
     n_files = sum(
         1 for f in os.listdir(wh.path("nomap")) if f.endswith(".parquet")
     )
+    assert n_files == 4
     n = merge_and_write(
         wh, "nomap", wh.read(spark, "nomap"), changes,
         pks=["pk"], version_cols=VC,
     )
-    if n_files > 1:
-        assert n < 50  # scan scope: only the touched file rewrote
+    assert n < 50  # scan scope: only the touched file rewrote
     assert wh.read(spark, "nomap").filter("pk = 14").first().val == 9
     assert wh.read(spark, "nomap").count() == 50
     # prune_files=False forces the whole-table rewrite
@@ -239,18 +239,17 @@ def test_zone_scoped_merge_fallbacks(spark, tmp_path):
         pks=["pk"], version_cols=VC, prune_files=False,
     )
     assert n == 50
-    with pytest.raises(ValueError, match="no zone map"):
-        merge_and_write(
-            wh, "nomap", wh.read(spark, "nomap"), changes,
-            pks=["pk"], version_cols=VC, prune_files=True,
-        )
-    # map over a non-PK column only: require=True names the mismatch
-    wh.overwrite(_target_df(spark, 50), "wrongcol", stat_cols=["val"])
-    with pytest.raises(ValueError, match="none of the primary keys"):
-        merge_and_write(
-            wh, "wrongcol", wh.read(spark, "wrongcol"), changes,
-            pks=["pk"], version_cols=VC, prune_files=True,
-        )
+    # map over a non-PK column only: the zone pruner declines and the
+    # scan pruner lists the touched file
+    wh.overwrite(_target_df(spark, 50).repartition(4), "wrongcol",
+                 stat_cols=["val"])
+    n = merge_and_write(
+        wh, "wrongcol", wh.read(spark, "wrongcol"), changes,
+        pks=["pk"], version_cols=VC,
+    )
+    assert n < 50
+    assert wh.read(spark, "wrongcol").filter("pk = 14").first().val == 9
+    assert wh.read(spark, "wrongcol").count() == 50
     # all-NULL keys: zone declines; the scan scope treats the NULL-pk U
     # as matching nothing (insert), same semantics as the unpruned path
     _write_clustered(spark, wh, "nullk", n=30)
@@ -338,7 +337,7 @@ def test_erase_subjects_zone_pruned_copy_on_write(spark, tmp_path):
 def test_zone_scoped_merge_hive_layout_falls_back(spark, tmp_path):
     """A table hive-partitioned ON DISK but merged without partition_by
     (undeclared layout) must fall back to the whole-table path, not
-    crash in replace_files; prune_files=True names the mismatch."""
+    crash in replace_files."""
     wh = ParquetWarehouse(str(tmp_path / "wh"))
     df = _target_df(spark, 100).withColumn("part", F.col("pk") % 4)
     wh.overwrite(df, "t", partition_by=["part"], stat_cols=["pk"])
@@ -348,35 +347,9 @@ def test_zone_scoped_merge_hive_layout_falls_back(spark, tmp_path):
         "op string, pk long, val long, name string, part bigint, "
         "_dms_filename string, _dms_rownum long",
     )
-    with pytest.raises(ValueError, match="hive-partitioned"):
-        merge_and_write(
-            wh, "t", wh.read(spark, "t").select("pk", "val", "name", "part"),
-            changes, pks=["pk"], version_cols=VC, prune_files=True,
-        )
     n = merge_and_write(
         wh, "t", wh.read(spark, "t").select("pk", "val", "name", "part"),
         changes, pks=["pk"], version_cols=VC,
     )
     assert n == 100  # whole-table fallback, correct content
     assert wh.read(spark, "t").filter("pk = 14").first().val == 9
-
-
-def test_prune_files_require_incompatible_modes_raise(spark, tmp_path):
-    """prune_files=True must never be silently bypassed: a partitioned
-    merge whose ON-DISK layout doesn't match partition_by (here: a flat
-    table) and a schema-evolution batch both refuse it loudly."""
-    wh = ParquetWarehouse(str(tmp_path / "wh"))
-    _write_clustered(spark, wh, "t", n=50)
-    changes = _changes_df(spark, [("U", 14, 9, "x", "f", 1)])
-    with pytest.raises(ValueError, match="does not match partition_by"):
-        merge_and_write(
-            wh, "t", wh.read(spark, "t"), changes,
-            pks=["pk"], version_cols=VC,
-            partition_by=["val"], prune_files=True,
-        )
-    with pytest.raises(ValueError, match="evolution"):
-        merge_and_write(
-            wh, "t", wh.read(spark, "t"), changes,
-            pks=["pk"], version_cols=VC,
-            full_rewrite=True, prune_files=True,
-        )
